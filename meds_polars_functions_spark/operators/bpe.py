@@ -13,8 +13,10 @@ al. 2016 operate on a word-frequency dictionary, not the raw corpus):
    is a per-row native `aggregate` fold (no Python, no shuffle).
 
 The iteration-state lineage is cut with ``localCheckpoint`` every
-``checkpoint_every`` merges — the same guard the connected-components
-loop uses — so a 32k-merge vocabulary doesn't build a 32k-deep plan.
+``checkpoint_every`` merges, so a 32k-merge vocabulary doesn't build a
+32k-deep plan. The merge loop is not on the fixpoint driver
+(functions/fixpoint.py): each merge is a driver-side argmax, not a
+probe-until-unchanged step.
 
 Greedy leftmost-first, non-overlapping merge semantics match the
 published BPE algorithm: merging ``(a, a)`` over ``a a a`` yields

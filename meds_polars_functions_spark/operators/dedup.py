@@ -20,6 +20,8 @@ Scale design:
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import fixpoint
+
 # Mersenne prime 2^31-1: modulus for the universal-hash family
 # h_j(x) = (a_j * x + b_j) mod P — the standard minhash construction.
 # 31-bit values keep a_j * h < 2^62, safely inside signed-64 arithmetic.
@@ -710,10 +712,15 @@ def simhash_table(
         raise ValueError("simhash supports at most 64 bits")
     if portable and bits > 60:
         raise ValueError("portable simhash supports at most 60 bits")
+    # keyed by ROW, not by id: rows that share an id (or have a null id)
+    # each keep their own signature, as in the expression form. The row
+    # key is taken BEFORE the explode, in its own projection (a key in
+    # the explode's select would be evaluated once per word).
     w = df.select(
+        F.monotonically_increasing_id().alias("__row__"),
         F.col(id_col).alias("id"),
-        F.explode_outer(_words_expr(text_col)).alias("__w__"),
-    )
+        F.col(text_col).alias("__t__"),
+    ).select("__row__", "id", F.explode_outer(_words_expr("__t__")).alias("__w__"))
     if portable:
         h = F.conv(F.substring(F.md5(F.col("__w__")), 1, 15), 16, 10).cast("long")
     else:
@@ -722,7 +729,7 @@ def simhash_table(
         # must contribute −1 on every bit like the expression form's
         # empty aggregate — null-guard so the CASE below sees null
         h = F.when(F.col("__w__").isNotNull(), F.xxhash64(F.col("__w__")))
-    hc = w.select("id", h.alias("__h__"))
+    hc = w.select("__row__", "id", h.alias("__h__"))
     masks = [(1 << i) if i < 63 else -(1 << 63) for i in range(bits)]
     sums = [
         F.sum(
@@ -732,7 +739,7 @@ def simhash_table(
         ).alias(f"__b{i}__")
         for i, m in enumerate(masks)
     ]
-    per_bit = hc.groupBy("id").agg(*sums)
+    per_bit = hc.groupBy("__row__", "id").agg(*sums)
     sig = F.concat(
         *[
             F.when(F.col(f"__b{i}__") > 0, F.lit("1")).otherwise(F.lit("0"))
@@ -848,7 +855,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Cluster near-duplicate pairs into components: (id, cluster_id)
     with cluster_id = min id reachable in the pair graph.
@@ -861,14 +867,16 @@ def connected_components(
     final step of a dedup pipeline: pick min-id per cluster as canonical,
     drop the rest.
 
-    Lineage discipline (same as pagerank/k-core, graph.py): every round
-    the label table gets a LAZY ``localCheckpoint`` that the convergence
-    probe's own aggregation job materializes, so plan depth stays O(1)
-    per round instead of growing by two joins per iteration — without
-    the cut, a deep-diameter graph at 100 TB re-analyzes an ever-growing
-    tree and eventually stalls the driver. ``checkpoint_every`` is
-    retained for API compatibility but no longer used (the cadence is
-    every round, paid for by the probe job that runs anyway). For corpora whose dup graph has genuinely
+    Lineage discipline (same as k-core, graph.py): the rounds run on the
+    fixpoint driver, which gives the label table a LAZY
+    ``localCheckpoint`` every round that the convergence probe's own
+    aggregation job materializes, so plan depth stays O(1) per round
+    instead of growing by two joins per iteration — without the cut, a
+    deep-diameter graph at 100 TB re-analyzes an ever-growing tree and
+    eventually stalls the driver. Raises ``RuntimeError`` if
+    ``max_iterations`` rounds do not converge: a partial result would
+    split one component under several cluster ids, and dedup would keep
+    several "canonical" copies. For corpora whose dup graph has genuinely
     long chains (boilerplate threads), the upgrade path is the
     large-star/small-star algorithm (Kiveris et al., "Connected Components
     in MapReduce and Beyond"), which converges in O(log n) rounds
@@ -884,62 +892,41 @@ def connected_components(
         .distinct()
         .persist()
     )
-    # LAZY |nodes|-sized checkpoint per round, materialized BY the
-    # convergence probe (round 16 — the kcore/pagerank pattern): the
-    # label table is referenced twice per round (neighbor_min + the left
-    # join), so a per-round lineage cut is required; the probe's
-    # full-table aggregation computes every partition, completing the
-    # cut in the SAME job. Replaces the round-15 persist/eager-cut/
-    # unpersist bookkeeping — one driver action per round instead of
-    # two-plus, and the returned frame is a materialized checkpoint, not
-    # a leaked CacheManager entry.
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint(eager=False)
     )
-    # convergence probe: per-node labels only ever DECREASE under
-    # min-label propagation, so the label sum is strictly monotone until
-    # the fixpoint — sum unchanged ⟺ no label changed. One partial-agg
-    # job per round instead of the labels⋈labels diff join it replaces
-    # (that join was ~half the per-round job count on small graphs).
-    # decimal(38,0) keeps the sum exact far past long overflow.
-    def _label_sum(l: DataFrame):
-        return l.agg(F.sum(F.col("cluster_id").cast("decimal(38,0)"))).first()[0]
 
-    prev_sum = _label_sum(labels)
-    converged = False
-    for it in range(max_iterations):
+    def min_label_step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
             .agg(F.min("cluster_id").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_label"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        ).localCheckpoint(eager=False)
-        s = _label_sum(new_labels)  # materializes the lazy checkpoint
-        labels = new_labels
-        if s == prev_sum:
-            converged = True
-            break
-        prev_sum = s
-    edges.unpersist()
-    if not converged:
-        # silent partial convergence would hand back one component under
-        # several cluster ids — dedup would keep multiple "canonical" copies
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (pair-graph diameter exceeds it); raise max_iterations"
+        return labels.join(
+            neighbor_min, labels["id"] == neighbor_min["src"], "left"
+        ).select(
+            "id",
+            F.least(
+                F.col("cluster_id"), F.coalesce(F.col("nbr_label"), F.col("cluster_id"))
+            ).alias("cluster_id"),
         )
-    return labels
+
+    # convergence probe: per-node labels only ever DECREASE under
+    # min-label propagation, so the label sum is strictly monotone until
+    # the fixpoint — sum unchanged ⟺ no label changed. decimal(38,0)
+    # keeps the sum exact far past long overflow.
+    try:
+        return fixpoint(
+            labels,
+            min_label_step,
+            [F.sum(F.col("cluster_id").cast("decimal(38,0)"))],
+            max_iterations,
+            "connected_components",
+        )
+    finally:
+        edges.unpersist()
 
 
 def connected_components_star(
@@ -947,7 +934,6 @@ def connected_components_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 50,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -964,23 +950,16 @@ def connected_components_star(
     component's min id).
 
     Cost per round: two groupBy shuffles on node id over the (shrinking)
-    edge table plus one exceptAll convergence probe — same order as one
-    min-label round. Same output contract as ``connected_components``:
+    edge table plus one signature probe — same order as one min-label
+    round. Same output contract as ``connected_components``:
     (id, cluster_id = min reachable id), only nodes appearing in ``pairs``.
-    Same lineage discipline: localCheckpoint every ``checkpoint_every``
-    rounds keeps plan depth O(1).
+    Same lineage discipline and the same ``RuntimeError`` on
+    non-convergence: the rounds run on the fixpoint driver.
     """
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
-    )
-    all_nodes = (
-        edges.select(F.col("u").alias("id"))
-        .unionByName(edges.select(F.col("v").alias("id")))
-        .distinct()
-        .persist()
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -1015,54 +994,24 @@ def connected_components_star(
 
     # order-insensitive set signature (count, sum of per-edge hashes):
     # equal signatures on two DISTINCT edge sets mean set equality up to a
-    # ~2^-64 per-round hash-collision chance — the probe is one partial-agg
-    # job instead of the two exceptAll shuffle joins it replaces (those
-    # dominated wall-clock: ~2 extra jobs x O(log n) rounds over a table
-    # that is tiny by then)
-    def _sig(e: DataFrame) -> tuple:
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        return (r["n"], r["h"])
-
-    prev_sig = _sig(edges)
-    converged = False
-    for it in range(max_iterations):
-        # LAZY per-round cut materialized BY the signature probe (round
-        # 16, the connected_components/kcore pattern): the probe's
-        # full-table aggregation computes every partition, completing
-        # the lineage cut in the same job — replaces the per-round
-        # persist/eager-cut/unpersist bookkeeping (one driver action per
-        # round instead of two-plus). ``checkpoint_every`` is retained
-        # for API compatibility; the effective cadence is every round.
-        new_edges = small_star(large_star(edges)).localCheckpoint(eager=False)
-        sig = _sig(new_edges)  # materializes the lazy checkpoint
-        if it == 0:
-            edges.unpersist()  # the initial persisted edge table
-        edges = new_edges
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        edges.unpersist()
-        all_nodes.unpersist()
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
-            "iterations; raise max_iterations"
-        )
-    # at fixpoint every edge is (node -> component min); component mins
-    # themselves have no outgoing edge, so re-attach them labeling self
-    labels = edges.groupBy("u").agg(F.min("v").alias("cluster_id"))
-    out = (
-        all_nodes.join(labels, all_nodes["id"] == labels["u"], "left")
-        .select("id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id"))
+    # ~2^-64 per-round hash-collision chance, for one partial-agg job
+    star = fixpoint(
+        edges,
+        lambda e: small_star(large_star(e)),
+        [F.count(F.lit(1)), F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0))],
+        max_iterations,
+        "connected_components_star",
     )
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    all_nodes.unpersist()
-    return out
+    # at fixpoint every edge is (node -> component min) and every node of
+    # a component appears in one; the mins themselves have no outgoing
+    # edge, so they are labeled through the (min, min) rows
+    return (
+        star.select("u", "v")
+        .unionByName(star.select(F.col("v").alias("u"), "v"))
+        .groupBy(F.col("u").alias("id"))
+        .agg(F.min("v").alias("cluster_id"))
+        .localCheckpoint(eager=True)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -11,14 +11,28 @@ each iteration is one shuffle-join on ``src`` plus one aggregation on
 REUSED every iteration (persisted once, repartitioned on the join key up
 front); ranks are |nodes|-sized. The dangling-node mass and the global
 rank sum are one-row aggregates cross-joined back (broadcast), never
-driver round-trips. Lineage is cut with localCheckpoint every few
-iterations so the plan doesn't grow unboundedly with iteration count.
+driver round-trips. Lineage is cut with a lazy localCheckpoint every
+iteration, filled by that round's own full-table aggregate, so the plan
+stays one iteration deep whatever the iteration count. k-core runs on
+the shared fixpoint driver (functions/fixpoint.py); pagerank, label
+propagation and the stress BFS keep their own loops (see each).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.fixpoint import fixpoint
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Undirected simple edge table ``(s, d)``: both directions of every
+    edge, self-loops dropped, duplicates removed."""
+    e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).filter(
+        F.col("s") != F.col("d")
+    )
+    return e0.union(e0.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
 
 
 def pagerank(
@@ -27,7 +41,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     n_iter: int = 10,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
@@ -35,10 +48,11 @@ def pagerank(
     redistribute their mass uniformly — the standard stochastic-matrix
     completion, so results match the textbook formulation exactly.
 
-    ``checkpoint_every`` is retained for API compatibility but no longer
-    used: the rank vector is |nodes|-sized, so it is localCheckpoint-ed
-    EVERY iteration (see the loop comment for the measured blowup the
-    deferred cadence caused).
+    The rank vector is |nodes|-sized and localCheckpoint-ed EVERY
+    iteration (see the loop comment for the measured blowup a deferred
+    cadence caused). Not on the fixpoint driver: it runs a fixed
+    ``n_iter`` rounds, and its dangling-mass probe can repeat without
+    the ranks having converged.
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -227,12 +241,16 @@ def triangle_count(
     )
 
 
+# label_propagation's eager-cut cadence: bounds plan growth for deep
+# loops without the per-round cut that measured +85% (see the loop).
+_LPA_CHECKPOINT_EVERY = 4
+
+
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 3,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007) with a DETERMINISTIC update rule: each round, every node adopts
@@ -251,12 +269,11 @@ def label_propagation(
     exchange via ReusedExchange) + one (node, label) count agg + one
     argmax agg. ``min_by`` is a declarative aggregate, so it resolves
     map-side as a partial aggregate — no window, no sort.
-    Lineage is cut with localCheckpoint like the other iterative ops.
+    Lineage is cut by an eager localCheckpoint every
+    ``_LPA_CHECKPOINT_EVERY`` rounds, not every round. Not on the fixpoint
+    driver: it runs a fixed ``n_iter`` rounds with no per-round cut, and
+    a per-round cut measured +85% (see the loop comment).
     """
-    e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-    )
     # Round-15 postscript: per-iteration lineage cuts were TRIED here —
     # eager localCheckpoints measured +85% on the interleaved A/B and
     # lazy RDD checkpoints +88% — and REVERTED. Mechanism: a LogicalRDD
@@ -280,11 +297,7 @@ def label_propagation(
     # job, the persists bought nothing there — dropping them fixes the
     # leak without touching the execution shape (A/B parity, same plan
     # modulo InMemoryTableScan wrappers).
-    und = (
-        e0.union(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .repartition("d")
-    )
+    und = _undirected(edges, src, dst).repartition("d")
     labels = (
         und.select(F.col("s").alias("node"))
         .distinct()
@@ -309,7 +322,7 @@ def label_propagation(
             .join(new, "node", "left")
             .select("node", F.coalesce("label", "__old__").alias("label"))
         )
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % _LPA_CHECKPOINT_EVERY == 0:
             labels = labels.localCheckpoint(eager=True)
     return labels
 
@@ -319,7 +332,6 @@ def k_core_decomposition(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Exact k-core decomposition (coreness per node) by the distributed
     H-index fixpoint iteration (Lü/Chen/Ren/Zhang/Zhou/Stanley 2016:
@@ -334,58 +346,26 @@ def k_core_decomposition(
     Scale design (the LPA skeleton): the undirected edge table is
     materialized once, pre-partitioned on the neighbor-side join key
     and persisted; each iteration is ONE join (coreness is
-    |nodes|-sized, edges reuse their exchange) + one per-node H-index.
-    ``checkpoint_every`` is retained for API compatibility but no longer
-    used (the pagerank note applies verbatim): every round's
-    |nodes|-sized state is checkpointed, materialized by the convergence
-    probe's own job.
+    |nodes|-sized, edges reuse their exchange) + one per-node H-index,
+    run by the fixpoint driver: every round's |nodes|-sized state is
+    lazily checkpointed and filled by the convergence probe's own job.
 
     The H-index avoids any collect AND any edge-sized exchange: neighbor
     values are first counted per (node, value) — a map-side partial
     aggregate, so only (node, distinct value, count) rows shuffle — and
     ``H = max(min(cumulative_count, value))`` over the value-descending
     count table (provably equal to the per-element
-    ``max(min(rank, value))`` form; see the loop comment). The update is
+    ``max(min(rank, value))`` form; see the step comment). The update is
     monotone non-increasing and integer-valued, so the fixpoint check
-    is exact: the loop stops the first round NOTHING changes (one
-    O(1)-rows sum probe per iteration — the same driver round-trip
-    class as the kmeans trainer's convergence test), with ``max_iter``
-    as a backstop (convergence is typically O(graph "depth"), tens of
-    rounds on real graphs). Lineage cut with localCheckpoint every
-    iteration (|nodes|-sized).
+    is exact: iteration stops the first round NOTHING changes (one
+    O(1)-rows sum probe per iteration). Convergence is typically
+    O(graph "depth"), tens of rounds on real graphs; raises
+    ``RuntimeError`` if ``max_iter`` rounds do not reach the fixpoint
+    (a non-fixpoint table is not the coreness).
     """
     from pyspark.sql import Window
 
-    e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-    )
-    und = (
-        e0.union(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .repartition("d")
-        .persist()
-    )
-    # LAZY |nodes|-sized checkpoint + sum probe in ONE action (round 16,
-    # VERDICT r15 item 2): the convergence probe's aggregation job is
-    # what materializes the checkpoint (a full-table sum computes every
-    # partition, so the lineage cut is complete), replacing the round-15
-    # eager-checkpoint-then-collect pair — one driver action per round
-    # instead of two. The degree init doubles as iteration-0 state and
-    # its materialization fills the edge cache before the loop's stages
-    # can race on it.
-    cores = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("coreness"))
-        .localCheckpoint(eager=False)
-    )
-    # Convergence probe (optimization round 15): the H-update is monotone
-    # NON-INCREASING and integer-valued per node, so the table is
-    # unchanged iff sum(coreness) is unchanged — one scalar aggregate
-    # over the freshly materialized |nodes| table replaces the old
-    # new⋈old inequality join (a full extra join + exchange per round).
-    # Same fixpoint, same number of H-rounds executed, identical output.
-    prev_sum = cores.agg(F.sum("coreness")).collect()[0][0]
+    und = _undirected(edges, src, dst).repartition("d").persist()
     # H-index from value COUNTS (optimization round 15, guide §2.3
     # "aggregate before you shuffle"): with per-node neighbor values
     # grouped as (value v_i, count c_i) sorted by v desc and cumulative
@@ -399,7 +379,8 @@ def k_core_decomposition(
     # edge (measured 12 MB -> ~1 MB per round at sf0.1), and the window
     # then sorts the compact count table, not the edge-sized one.
     w = Window.partitionBy("node").orderBy(F.col("__nc__").desc())
-    for it in range(max_iter):
+
+    def h_step(cores: DataFrame) -> DataFrame:
         nbr = und.join(
             cores.select(F.col("node").alias("d"), F.col("coreness").alias("__nc__")),
             "d",
@@ -407,7 +388,7 @@ def k_core_decomposition(
         counts = nbr.groupBy("node", "__nc__").agg(
             F.count(F.lit(1)).alias("__cnt__")
         )
-        new = (
+        return (
             counts.select(
                 "node",
                 F.least(
@@ -420,21 +401,22 @@ def k_core_decomposition(
             .groupBy("node")
             .agg(F.max("__h__").alias("coreness"))
         )
-        # lazy per-round cut, materialized BY the convergence probe
-        # (round 16): the sum computes every partition of the checkpoint
-        # RDD, so the next round reads stored blocks and lineage stays
-        # linear — one job per round instead of checkpoint-job + probe-job
-        new = new.localCheckpoint(eager=False)
-        new_sum = new.agg(F.sum("coreness")).collect()[0][0]
-        cores = new
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # the returned frame is already a materialized checkpoint; the edge
-    # cache can be released without any recompute hazard (ADVICE r13
-    # item 5 lifetime class).
-    und.unpersist()
-    return cores
+
+    # The degree init is iteration-0 state; its probe job also fills the
+    # edge cache before the first step's stages can race on it. The
+    # H-update is monotone NON-INCREASING and integer-valued per node, so
+    # the table is unchanged iff sum(coreness) is unchanged.
+    degree = und.groupBy(F.col("s").alias("node")).agg(
+        F.count(F.lit(1)).alias("coreness")
+    )
+    try:
+        # the returned frame is a materialized checkpoint, so the edge
+        # cache can be released without any recompute hazard
+        return fixpoint(
+            degree, h_step, [F.sum("coreness")], max_iter, "k_core_decomposition"
+        )
+    finally:
+        und.unpersist()
 
 
 def verify_k_core(edges: DataFrame, cores: DataFrame) -> DataFrame:
@@ -451,10 +433,7 @@ def verify_k_core(edges: DataFrame, cores: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    e0 = edges.select(F.col(edges.columns[0]).alias("s"), F.col(edges.columns[1]).alias("d")).filter(
-        F.col("s") != F.col("d")
-    )
-    und = e0.union(e0.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
+    und = _undirected(edges, edges.columns[0], edges.columns[1])
     nbr = und.join(
         cores.select(F.col("node").alias("d"), F.col("coreness").alias("__nc__")), "d"
     ).select(F.col("s").alias("node"), F.col("d").alias("__nbr__"), "__nc__")
@@ -513,18 +492,16 @@ def stress_centrality(
       paths ENDING at v; d > 0 drops v = s), summed over sources.
     - Layer count is the sampled eccentricity (measured 3-4 on the
       trade graph at every SF); ``max_depth`` bounds the unroll and
-      the loop early-stops on an empty frontier.
+      the loop early-stops on an empty frontier. Not on the fixpoint
+      driver: it stops on an empty frontier, not an unchanged state,
+      and keeps every layer for the backward pass.
 
     Returns ``(node, stress)`` for EVERY node of the graph (unreached
     nodes get 0). Edges are undirected/simple like the other ops here.
     """
-    e0 = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
     und = (
-        e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
+        _undirected(edges, src, dst)
+        .select(F.col("s").alias("u"), F.col("d").alias("v"))
         .repartition("u")
         .persist()
     )

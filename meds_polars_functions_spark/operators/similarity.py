@@ -592,7 +592,9 @@ def kmeans_train_distributed(
     reduces to k×d partial-aggregated rows; only those (plus one inertia
     scalar folded into the same pass at pos 0) ever cross the wire or
     reach the driver. Empty cells keep their previous centroid. k×d must
-    be driver-small (it is the model), the corpus never is."""
+    be driver-small (it is the model), the corpus never is. The loop is
+    not on the fixpoint driver (functions/fixpoint.py): its state is the
+    driver-side centroid list, not a DataFrame."""
     base = df.select(F.col(vec_col).alias("__v__"), *( [F.col(id_col).alias("__id__")] if id_col else [] ))
     if isinstance(init, list):
         if not init:

@@ -291,10 +291,6 @@ def doc_fingerprint(text_col: str, mod: int = (1 << 61) - 1, base: int = 1_000_0
     )
 
 
-def fingerprint_documents(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return df.select(F.col(id_col), doc_fingerprint(text_col).alias("fingerprint"))
-
-
 def quality_filter(
     df: DataFrame,
     text_col: str,
@@ -1262,7 +1258,9 @@ def blocklist_hits(
                 " ".join(words)
             }
     lens = sorted(by_len.items())
-    token_re = re.compile(r"[^a-z0-9]+")
+    # the ``_WORDS`` tokenizer: apostrophes stay inside a word, so
+    # "slow's" is one token and never hits the term "slow"
+    token_re = re.compile(r"[^a-z0-9']+")
 
     def _n_hits(texts):
         out = []

@@ -3,18 +3,22 @@ clustering."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 import pytest
 
 from meds_polars_functions_spark.operators.dedup import (
     connected_components,
+    connected_components_star,
     exact_dedup,
     exact_dup_groups,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     word_shingles,
 )
+from meds_polars_functions_spark.operators.graph import k_core_decomposition
 
 
 def test_word_shingles(spark):
@@ -44,21 +48,50 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 7: 1, 5: 5, 9: 5}
 
 
-def test_connected_components_chain_bounded_plan(spark):
-    # 17-node chain: diameter 16 forces many label-propagation rounds.
-    # With checkpoint_every=2 the plan must stay bounded — lineage is cut
-    # every other round — while still converging to one component.
+@pytest.mark.parametrize(
+    "op, kwargs, max_kw, cols",
+    [
+        (connected_components, {}, "max_iterations", ("id", "cluster_id")),
+        (connected_components_star, {}, "max_iterations", ("id", "cluster_id")),
+        (
+            k_core_decomposition,
+            {"src": "id_a", "dst": "id_b"},
+            "max_iter",
+            ("node", "coreness"),
+        ),
+    ],
+    ids=["connected_components", "connected_components_star", "k_core_decomposition"],
+)
+def test_fixpoint_operators_chain_bounded_plan(spark, op, kwargs, max_kw, cols):
+    """The fixpoint-driver contract on each operator built on it: a
+    9-node chain (diameter 8) takes several rounds yet returns the right
+    labels (one component with min id 1; a path is a pure 1-core), the
+    per-round lazy cut keeps the analyzed plan bounded, and too few
+    rounds raise instead of returning a non-fixpoint table."""
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 17)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(1, 9)], "id_a long, id_b long"
     )
-    labels = connected_components(pairs, max_iterations=25, checkpoint_every=2)
-    out = {r["id"]: r["cluster_id"] for r in labels.collect()}
-    assert out == {i: 1 for i in range(1, 18)}
-    # Plan-depth bound: after the final checkpoint at most checkpoint_every
-    # rounds of joins sit on top of a LogicalRDD scan, so the analyzed plan
-    # stays small no matter how many rounds ran before it.
-    plan = labels._jdf.queryExecution().analyzed().toString()
+    out = op(pairs, **kwargs, **{max_kw: 20})
+    key, val = cols
+    assert {r[key]: r[val] for r in out.collect()} == {i: 1 for i in range(1, 10)}
+    # Plan-depth bound: the result sits on a LogicalRDD scan of the last
+    # cut, so the analyzed plan stays small however many rounds ran.
+    plan = out._jdf.queryExecution().analyzed().toString()
     assert len(plan.splitlines()) < 60, f"unbounded lineage: {len(plan.splitlines())} lines"
+    # the chain is not its own fixpoint, so one round cannot confirm one
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
+        op(pairs, **kwargs, **{max_kw: 1})
+
+
+def test_fixpoint_probe_must_be_aggregate_columns(spark):
+    """The lazy cut is only filled if the probe computes every
+    partition: a callable probe (which could ``limit`` or ``sample``)
+    is rejected before any job runs."""
+    from meds_polars_functions_spark.functions.fixpoint import fixpoint
+
+    df = spark.range(4)
+    with pytest.raises(TypeError, match="aggregate Columns"):
+        fixpoint(df, lambda d: d, [lambda d: d.limit(1).count()], 3, "probe check")
 
 
 @pytest.mark.slow
@@ -85,7 +118,7 @@ def test_connected_components_star_deep_chain_logn_rounds(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 65)], "id_a long, id_b long"
     )
-    labels = connected_components_star(pairs, max_iterations=12, checkpoint_every=3)
+    labels = connected_components_star(pairs, max_iterations=12)
     out = {r["id"]: r["cluster_id"] for r in labels.collect()}
     assert out == {i: 1 for i in range(1, 66)}
 
@@ -106,6 +139,10 @@ def test_simhash_table_matches_expression_form(spark):
         (5, "   "),
         (6, "one"),
         (7, "repeat repeat repeat repeat distinct"),
+        # rows sharing an id, and null ids, each keep their own signature
+        (7, "a different document under a repeated id"),
+        (None, "null id first text"),
+        (None, "null id second text"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for portable, bits in [(True, 60), (False, 64), (False, 32)]:
@@ -113,8 +150,8 @@ def test_simhash_table_matches_expression_form(spark):
             F.col("doc_id").alias("id"), simhash("text", bits, portable).alias("sig")
         )
         new = simhash_table(df, "text", "doc_id", bits, portable)
-        got = {r["id"]: r["sig"] for r in new.collect()}
-        want = {r["id"]: r["sig"] for r in old.collect()}
+        got = Counter((r["id"], r["sig"]) for r in new.collect())
+        want = Counter((r["id"], r["sig"]) for r in old.collect())
         assert got == want, (portable, bits)
 
 

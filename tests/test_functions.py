@@ -317,6 +317,24 @@ def test_blocklist_hits_token_exact_and_phrases(spark):
         for r in blocklist_hits(df, "text", "doc_id", ["ass", "bad phrase"]).collect()
     }
     assert out == {2: 2, 3: 2}
+    # apostrophes stay inside a token, as in the ``_WORDS`` tokenizer and
+    # the DuckDB oracle: "slow's" is not "slow", "hash'join" is one token,
+    # and a term with an apostrophe matches itself
+    df = spark.createDataFrame(
+        [
+            (1, "the query was slow's fault"),
+            (2, "a hash'join plan"),
+            (3, "please don't do that"),
+        ],
+        "doc_id long, text string",
+    )
+    out = {
+        r["id"]: r["n_hits"]
+        for r in blocklist_hits(
+            df, "text", "doc_id", ["slow", "hash join", "don't"]
+        ).collect()
+    }
+    assert out == {3: 1}
 
 
 def test_language_id_udf_matches_expression_form(spark):

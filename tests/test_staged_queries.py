@@ -877,12 +877,14 @@ def test_staged_kcore_iteration_binds(spark):
     fix_p = {
         r["node"]: r["coreness"] for r in k_core_decomposition(path).collect()
     }
-    one_p = {
-        r["node"]: r["coreness"]
-        for r in k_core_decomposition(path, max_iter=1).collect()
-    }
     assert all(v == 1 for v in fix_p.values())  # a path is pure 1-core
-    assert fix_p != one_p, "one H pass already at fixpoint on a 10-path"
+    # The H-update is monotone, so an unchanged coreness sum means an
+    # unchanged table: at max_iter=2 the driver raises exactly when one
+    # H pass is not the fixpoint. (max_iter=1 would raise even when one
+    # pass reaches the fixpoint: the driver needs a second pass to see
+    # the table come back unchanged.)
+    with pytest.raises(RuntimeError):
+        k_core_decomposition(path, max_iter=2)
 
 
 def test_staged_stress_centrality_matches_oracle_strict(spark, con):
